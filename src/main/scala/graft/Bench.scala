@@ -1,9 +1,13 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main (driver contract): times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR, then measures flagship extraction throughput (docs/sec) on the
-  * materialized corpus table, and prints ONE JSON line. */
+  * materialized corpus table, and prints ONE JSON line. A query that throws is
+  * reported as "failed" (in `queries` and the `failed` list, out of `total`) and the
+  * run exits 1. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -36,22 +40,29 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None => SparkEntry.queries
     }
+    // a query that throws in either rep is FAILED: it gets no time, stays out of
+    // `total`, and makes the run exit non-zero — never a fast-looking sample
     val results = selected.map { case (name, fn) =>
       val secs = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      name -> secs
+        try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+        catch { case NonFatal(_) => None }
+      }
+      name -> (if (secs.contains(None)) None else Some(secs.flatten.min))
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val qs = results.map {
+      case (k, Some(v)) => s"\"$k\":$v"
+      case (k, None) => s"\"$k\":\"failed\""
+    }.mkString("{", ",", "}")
+    val failed = results.collect { case (k, None) => k }.toSeq.sorted
+    val failedJson = failed.map(k => s"\"$k\"").mkString("[", ",", "]")
+    val total = results.values.flatten.sum
 
     if (only.isDefined) {
       println(s"""{"metric":"only","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""sf":"$sfDir","cpus":$cpus}""")
+        s""""failed":$failedJson,"sf":"$sfDir","cpus":$cpus}""")
       spark.stop()
+      exitOnFailures(failed)
       return
     }
 
@@ -68,8 +79,15 @@ object Bench {
     val docsPerSec = nDocs / flagshipSecs
 
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""sf":"$sfDir","flagship_docs":$nDocs,"flagship_secs":$flagshipSecs,""" +
-      s""""docs_per_sec":$docsPerSec,"cpus":$cpus}""")
+      s""""failed":$failedJson,"sf":"$sfDir","flagship_docs":$nDocs,""" +
+      s""""flagship_secs":$flagshipSecs,"docs_per_sec":$docsPerSec,"cpus":$cpus}""")
     spark.stop()
+    exitOnFailures(failed)
   }
+
+  private def exitOnFailures(failed: Seq[String]): Unit =
+    if (failed.nonEmpty) {
+      System.err.println(s"Bench: ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
 }

@@ -99,11 +99,14 @@ object ContainerCodec extends MediaCodec {
       var content: Array[Byte] = null
       while (i + 8 <= p.length) {
         val cc = fourcc(p, i)
-        val sz = le32(p, i + 4)
-        if (sz < 0 || i + 8 + sz > p.length) bad(s"riff chunk '$cc' overruns")
+        // sizes are unsigned 32-bit: bound them in Long, where i + 8 + size cannot
+        // wrap past the check
+        val sz = le32(p, i + 4) & 0xffffffffL
+        if (i + 8L + sz > p.length) bad(s"riff chunk '$cc' overruns")
+        val end = i + 8 + sz.toInt
         if (cc == "dur ") dur = le32(p, i + 8)
-        if (cc == "data") content = java.util.Arrays.copyOfRange(p, i + 8, i + 8 + sz)
-        i += 8 + sz
+        if (cc == "data") content = java.util.Arrays.copyOfRange(p, i + 8, end)
+        i = end
       }
       if (dur < 0 || content == null) bad("wave missing dur /data chunks")
       DecodedMedia(0, 0, dur, 0, content)
@@ -115,15 +118,16 @@ object ContainerCodec extends MediaCodec {
       var meta: Array[Int] = null
       var content: Array[Byte] = null
       while (i + 8 <= p.length) {
-        val sz = be32(p, i)
+        val sz = be32(p, i) & 0xffffffffL // unsigned, bounded in Long like RIFF's
         val cc = fourcc(p, i + 4)
         if (sz < 8 || i + sz > p.length) bad(s"bmff box '$cc' overruns")
+        val end = i + sz.toInt
         if (cc == "gmvh") {
           if (sz != 24) bad("gmvh box size")
           meta = Array(be32(p, i + 8), be32(p, i + 12), be32(p, i + 16), be32(p, i + 20))
         }
-        if (cc == "mdat") content = java.util.Arrays.copyOfRange(p, i + 8, i + sz)
-        i += sz
+        if (cc == "mdat") content = java.util.Arrays.copyOfRange(p, i + 8, end)
+        i = end
       }
       if (meta == null || content == null) bad("bmff missing gmvh/mdat boxes")
       DecodedMedia(meta(0), meta(1), meta(2), meta(3), content)

@@ -4,9 +4,13 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
 import graft.operators.{EngineConfig, ExtractPipeline, SpanMetricsAgg}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /**
  * Snapshot-committed, resumable extraction sink (SURVEY.md §7 step 5) — the Iceberg-style
@@ -302,8 +306,6 @@ object SnapshotSink {
             "the schema from the producing pipeline instead", e)
     }
 
-  /** Parse the manifest (empty if none exists yet). Read through Spark's JSON source
-    * with the case-class schema — no extra JSON dependency. */
   /** Sidecar transaction log for the streaming sink (`stream-batches.json`, JSON
     * lines of {batch, base}): maps EXTERNAL micro-batch ids to their allocated
     * composite base so (a) a re-delivered batch reuses its allocation and the
@@ -382,13 +384,45 @@ object SnapshotSink {
   }
 
   def readManifest(spark: SparkSession, outDir: String): Seq[ManifestEntry] =
-    parseManifest(spark, Paths.get(outDir).resolve("manifest.json"))
+    parseManifest(Paths.get(outDir).resolve("manifest.json"))
 
-  private def parseManifest(spark: SparkSession, p: Path): Seq[ManifestEntry] = {
+  private val ManifestJson = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS).build()
+
+  /** Parse the manifest (empty if none exists yet): one [[jsonOf]] line per entry,
+    * read on the driver (Jackson), like every other sidecar — a manifest is
+    * O(buckets) bytes of metadata, so it never costs a Spark job. Numeric fields are
+    * required (a line without one fails loudly); an absent or null string or array
+    * field reads back `null`, so a manifest from an older format version makes
+    * [[fastVerify]] invalidate the bucket instead of throwing. */
+  private[graft] def parseManifest(p: Path): Seq[ManifestEntry] = {
     if (!Files.exists(p)) return Seq.empty
-    val enc = Encoders.product[ManifestEntry]
-    spark.read.schema(enc.schema).json(p.toString).as[ManifestEntry](enc)
-      .collect().toSeq
+    Files.readAllLines(p).asScala.toSeq.filter(_.trim.nonEmpty).map { line =>
+      val n = ManifestJson.readTree(line)
+      def field(f: String): JsonNode = {
+        val v = n.get(f)
+        if (v == null || v.isNull) null else v
+      }
+      def num(f: String): JsonNode = {
+        val v = field(f)
+        if (v == null || !v.isNumber)
+          throw new IllegalStateException(s"manifest $p: field `$f` missing in $line")
+        v
+      }
+      def str(f: String): String = Option(field(f)).map(_.asText).orNull
+      def arr[A](f: String)(el: JsonNode => A): Seq[A] =
+        Option(field(f)).map(_.elements().asScala.map(el).toVector).orNull
+      ManifestEntry(
+        bucket = num("bucket").asLong, rows = num("rows").asLong,
+        content_hash = str("content_hash"),
+        files = arr("files")(_.asText), file_sizes = arr("file_sizes")(_.asLong),
+        file_hashes = arr("file_hashes")(_.asText),
+        engine_version = str("engine_version"),
+        n_spans = num("n_spans").asLong, n_media = num("n_media").asLong,
+        n_text = num("n_text").asLong, n_err = num("n_err").asLong,
+        ocr_chars = num("ocr_chars").asLong, n_words = num("n_words").asLong,
+        conf_sum = num("conf_sum").asDouble, wall_ms = num("wall_ms").asLong)
+    }
   }
 
   /** Manifest as a DataFrame (the lineage/metrics table surfaced to queries). */
@@ -434,7 +468,7 @@ object SnapshotSink {
     require(Files.exists(p),
       s"no manifest version $v under $outDir — available: " +
         s"[${versions(outDir).mkString(", ")}]")
-    parseManifest(spark, p)
+    parseManifest(p)
   }
 
   /** [[lineage]] as of history version `v`. */
@@ -477,8 +511,12 @@ object SnapshotSink {
       "numbers are never reused, so the newest history file must survive")
     val out = Paths.get(outDir)
     // tags AND branches pin their versions: expiring a live branch's manifest
-    // would orphan every commit staged on it
-    val pinned = tags(outDir).values.toSet ++ branches(outDir).values.toSet
+    // would orphan every commit staged on it. HEAD's version is pinned too: a
+    // branch commit publishes history without moving HEAD, so the newest versions
+    // need not include it, and without its history file HEAD resolves to no
+    // version at all
+    val pinned = tags(outDir).values.toSet ++ branches(outDir).values.toSet +
+      headVersion(outDir)
     val drop = versions(outDir).dropRight(keepLast).filterNot(pinned)
     drop.foreach(v => Files.deleteIfExists(versionPath(out, v)))
     drop
@@ -642,7 +680,7 @@ object SnapshotSink {
       s"branch name '$name' must match ${TagNameRe.regex}")
     require(versions(outDir).contains(v),
       s"cannot branch at version $v — not in history [${versions(outDir).mkString(", ")}]")
-    val base = headVersion(outDir)
+    val base = resolvedHead(outDir)
     writeBranches(Paths.get(outDir),
       branchRefs(outDir) + (name -> (v, base)), io)
   }
@@ -665,6 +703,20 @@ object SnapshotSink {
     versions(outDir).reverse
       .find(v => Files.readString(versionPath(out, v)) == body)
       .getOrElse(0L)
+  }
+
+  /** [[headVersion]] for the fork-point bookkeeping of [[branch]] and
+    * [[fastForward]]: fails loudly when HEAD matches no history file while history
+    * exists — 0 there is not a version, and recording or comparing it would let the
+    * lost-update guard pass by accident. */
+  private def resolvedHead(outDir: String): Long = {
+    val head = headVersion(outDir)
+    if (head == 0L && versions(outDir).nonEmpty)
+      throw new IllegalStateException(
+        s"HEAD (manifest.json) under $outDir matches no history version in " +
+          s"[${versions(outDir).mkString(", ")}] — its version file was removed; " +
+          "restore() a retained version to republish HEAD")
+    head
   }
 
   private def resolveBranch(outDir: String, name: String): Long =
@@ -701,7 +753,7 @@ object SnapshotSink {
       throw new IllegalArgumentException(
         s"no branch '$name' under $outDir — available: " +
           s"[${refs.keys.toSeq.sorted.mkString(", ")}]"))
-    val head = headVersion(outDir)
+    val head = resolvedHead(outDir)
     if (head != base)
       throw new IllegalStateException(
         s"not a fast-forward: main HEAD is at version $head but branch '$name' " +
@@ -776,9 +828,12 @@ object SnapshotSink {
    *
    * Scale shape: the bucket function routes each requested id to exactly one bucket
    * driver-side (no scan), so a takedown of k documents over a 10^12-doc snapshot
-   * reads and rewrites at most k buckets' bytes — never the table. Buckets whose
-   * files contain NO matching rows (id never existed, or already deleted) are left
-   * byte-identical, verified cheaply by one pruned count per affected bucket.
+   * reads and rewrites at most k buckets' bytes — never the table. One grouped count
+   * over the affected buckets' manifest files finds the buckets that hold a victim;
+   * buckets whose files contain NO matching rows (id never existed, or already
+   * deleted) are left byte-identical. The matched buckets are rewritten by ONE
+   * commit, so a takedown publishes exactly one manifest version (none when nothing
+   * matched) and its Spark job count does not grow with the buckets it touches.
    *
    * Deletion is PHYSICAL by design: the rewrite deletes the bucket's old data files,
    * which EXPIRES every history version that referenced them ([[readCommittedAt]]
@@ -817,32 +872,30 @@ object SnapshotSink {
       .filter(b => existing.find(_.bucket == b).exists(_.rows > 0))
       .sorted
 
-    var manifest = existing.sortBy(_.bucket)
-    var deleted = 0L
-    val rewritten = Seq.newBuilder[Long]
-    affected.foreach { b =>
-      val entry = manifest.find(_.bucket == b).get
-      val files = entry.files.map(f => bucketDir(out, b).resolve(f).toString)
-      val cur = spark.read.option("basePath", out.resolve("data").toString)
-        .parquet(files: _*)
-      val matches = cur.filter(col("doc_id").isInCollection(targets)).count()
-      if (matches > 0) {
-        val t0 = System.nanoTime()
-        // NULL-id bystanders survive (NOT(NULL IN ...) is NULL — a bare filter
-        // would drop them from the rewrite; same guard as TableSnapshot.deleteIds)
-        val kept = cur
-          .filter(col("doc_id").isNull || !col("doc_id").isInCollection(targets))
-          .withColumn("bucket", lit(b))
-        val (m2, _) = commitWaveFlat(spark, out, kept, Seq(b),
-          manifest.filterNot(_.bucket == b), t0, io = io,
-          layoutCols = rewriteLayout(kept), spanMetrics = hasSpanMetrics(kept))
-        manifest = m2
-        deleted += matches
-        rewritten += b
-      }
+    val files = existing.filter(e => affected.contains(e.bucket))
+      .flatMap(e => e.files.map(f => bucketDir(out, e.bucket).resolve(f).toString))
+    if (files.isEmpty) return DeleteReport(0L, Seq.empty)
+    val cur = spark.read.option("basePath", out.resolve("data").toString)
+      .parquet(files: _*)
+      .withColumn("bucket", col("bucket").cast("long"))
+    // ONE grouped count over every affected bucket: victim rows per bucket; buckets
+    // absent from it hold no victim and stay byte-identical
+    val hits = cur.filter(col("doc_id").isInCollection(targets))
+      .groupBy(col("bucket")).count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val matched = hits.keys.toSeq.sorted
+    if (matched.nonEmpty) {
+      val t0 = System.nanoTime()
+      // NULL-id bystanders survive (NOT(NULL IN ...) is NULL — a bare filter
+      // would drop them from the rewrite; same guard as TableSnapshot.deleteIds)
+      val kept = cur.filter(col("bucket").isin(matched: _*))
+        .filter(col("doc_id").isNull || !col("doc_id").isInCollection(targets))
+      commitWaveFlat(spark, out, kept, matched,
+        existing.filterNot(e => hits.contains(e.bucket)).sortBy(_.bucket), t0, io = io,
+        layoutCols = rewriteLayout(kept), spanMetrics = hasSpanMetrics(kept))
     }
     deleteRecursively(out.resolve("staging"))
-    DeleteReport(deleted, rewritten.result())
+    DeleteReport(hits.values.sum, matched)
   }
 
   /** Outcome of an [[upsertDocs]] merge: documents whose rows were replaced
@@ -869,9 +922,9 @@ object SnapshotSink {
    * by doc_id before re-adding them), un-merged buckets merge for the first time
    * (SnapshotUpsertSpec drives a crash between waves through `crashAfterWaves`).
    *
-   * Scale shape: affected buckets are discovered by ONE distributed distinct over
-   * the update set's bucket keys (<= nBuckets rows reach the driver — never the doc
-   * ids themselves, which at daily-crawl scale are billions); each wave then reads
+   * Scale shape: affected buckets are discovered by ONE distributed grouped count
+   * over the update set's bucket keys (<= nBuckets rows reach the driver — never the
+   * doc ids themselves, which at daily-crawl scale are billions); each wave then reads
    * and rewrites ONLY its buckets' committed bytes (manifest-resolved file list),
    * anti-joins out the updated documents' old rows (null-keyed bystanders survive:
    * an anti join never matches a null key), unions the wave's update rows, and
@@ -944,24 +997,31 @@ object SnapshotSink {
       "manifest is not canonical (multiple generations per base bucket — an " +
         "un-compacted stream): run compact() first, a document's rows may " +
         "straddle generations")
-    val committedCols = baseVersion
+    // the merge's one schema inference: every wave reads its buckets with this
+    // schema, which skips the footer-inference job a read otherwise starts
+    val committedSchema = withLongBucket(baseVersion
       .map(readCommittedAt(spark, outDir, _))
       .getOrElse(readCommitted(spark, outDir))
-      .drop("bucket").columns
+      .schema)
+    val committedCols = committedSchema.fieldNames.filterNot(_ == "bucket")
     require(updates.columns.sorted.sameElements(committedCols.sorted),
       s"updates schema ${updates.columns.sorted.mkString("(", ",", ")")} must match " +
         s"the committed table ${committedCols.sorted.mkString("(", ",", ")")}")
     require(!updates.columns.contains("bucket"), "updates must not carry `bucket`")
     val idOfBase = existing.map(e => (e.bucket % nBuckets) -> e.bucket).toMap
 
-    // ONE distributed job discovers the affected buckets; only <= nBuckets bucket
-    // ids reach the driver. A NULL doc_id in the updates has no bucket to route to
-    // — refuse loudly (the committed table tolerates null-id bystanders, but an
-    // UPSERT row without an identity is undefined).
+    // ONE distributed job discovers the affected buckets AND the update set's
+    // per-bucket (rows, distinct docs); only <= nBuckets rows reach the driver. A
+    // doc_id fixes its bucket, so the per-bucket doc counts sum exactly. A NULL
+    // doc_id in the updates has no bucket to route to — refuse loudly (the
+    // committed table tolerates null-id bystanders, but an UPSERT row without an
+    // identity is undefined).
     val baseCol = bucketOf(col("doc_id"), nBuckets).cast("long")
-    val affectedBases = updates
-      .select(when(col("doc_id").isNull, lit(-1L)).otherwise(baseCol).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
+    val updStats = updates
+      .groupBy(when(col("doc_id").isNull, lit(-1L)).otherwise(baseCol).as("b"))
+      .agg(count(lit(1)), countDistinct(col("doc_id")))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val affectedBases = updStats.keys.toSeq.sorted
     require(!affectedBases.contains(-1L),
       "updates contain NULL doc_id rows — an upsert row needs an identity")
     affectedBases.foreach(b => require(idOfBase.contains(b),
@@ -1008,19 +1068,18 @@ object SnapshotSink {
       val cur =
         if (files.isEmpty)
           updW.withColumn("bucket", lit(0L)).limit(0)
-        else spark.read.option("basePath", out.resolve("data").toString)
-          .parquet(files: _*)
-          .withColumn("bucket", col("bucket").cast("long"))
-      // report counters: two bounded aggregates per wave (rows replaced, docs
-      // matched / updated) — the same job class as the metrics re-read
+        else spark.read.schema(committedSchema)
+          .option("basePath", out.resolve("data").toString).parquet(files: _*)
+      // report counters: one bounded aggregate per wave (rows replaced, docs
+      // matched); the update side's counts came with the routing job
       val curHit = cur.join(updIds, Seq("doc_id"), "left_semi")
         .agg(count(lit(1)), countDistinct(col("doc_id"))).head()
-      val updStat = updW
-        .agg(count(lit(1)), countDistinct(col("doc_id"))).head()
+      val updRows = wave.map(updStats(_)._1).sum
+      val updDocs = wave.map(updStats(_)._2).sum
       replacedRows += curHit.getLong(0)
       matchedDocs += curHit.getLong(1)
-      insertedDocs += updStat.getLong(1) - curHit.getLong(1)
-      upsertRows += updStat.getLong(0)
+      insertedDocs += updDocs - curHit.getLong(1)
+      upsertRows += updRows
 
       val targetOf = oldIds.zip(targetIds).toMap
       // branch mode re-keys the surviving rows to the fresh generation (a
@@ -1386,12 +1445,13 @@ object SnapshotSink {
     val metrics: Map[Long, WaveMetrics] =
       if (listPartitionDirs(staging).isEmpty) Map.empty
       else {
-        // partition-column type is INFERRED from the directory names (int for small
-        // batch ids, long once composite stream ids grow) — normalize to long
-        val staged = spark.read.parquet(staging.toString)
+        // re-read with the schema just written (bucket as long, for composite
+        // stream ids): no footer-inference job; the staged files are still re-read
+        val staged = spark.read.schema(withLongBucket(flat.schema))
+          .parquet(staging.toString)
         if (spanMetrics)
           staged
-            .groupBy(col("bucket").cast("long").as("bucket"))
+            .groupBy(col("bucket"))
             .agg(SpanMetricsAgg.spanMetrics(
               col("kind"), col("ok"), col("error"), col("text"),
               col("n_words"), col("conf_sum")).as("m"))
@@ -1403,7 +1463,7 @@ object SnapshotSink {
               confSum = r.getDouble(7))).toMap
         else
           staged
-            .groupBy(col("bucket").cast("long").as("bucket"))
+            .groupBy(col("bucket"))
             .agg(count(lit(1)).as("rows"))
             .collect()
             .map(r => r.getLong(0) -> WaveMetrics(rows = r.getLong(1))).toMap
@@ -1500,7 +1560,7 @@ object SnapshotSink {
    */
   private def fastVerify(out: Path, e: ManifestEntry): Boolean = {
     // Manifests from an older format version read back with null parallel arrays
-    // (Spark's JSON source yields null for absent fields): a null or length-skewed
+    // ([[parseManifest]] yields null for absent fields): a null or length-skewed
     // array set is a FAILED verification — the bucket is invalidated and rebuilt —
     // never an NPE that kills the advertised resume path (ADVICE r2).
     val arraysOk = e.files != null && e.file_sizes != null && e.file_hashes != null &&
@@ -1574,6 +1634,12 @@ object SnapshotSink {
       Seq("bucket", "doc_id", "offset")
     else "bucket" +: df.columns.find(_ != "bucket").toSeq
 
+  /** `schema` with its `bucket` column typed long — the type every commit path
+    * normalizes partition ids to (composite stream ids outgrow int). */
+  private def withLongBucket(schema: StructType): StructType =
+    StructType(schema.map(f =>
+      if (f.name == "bucket") f.copy(dataType = LongType) else f))
+
   private[sources] def hasSpanMetrics(df: DataFrame): Boolean =
     Seq("kind", "ok", "error", "text", "n_words", "conf_sum")
       .forall(df.columns.contains)
@@ -1636,7 +1702,7 @@ object SnapshotSink {
     v
   }
 
-  private def jsonOf(e: ManifestEntry): String = {
+  private[graft] def jsonOf(e: ManifestEntry): String = {
     def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     s"""{"bucket":${e.bucket},"rows":${e.rows},"content_hash":${q(e.content_hash)},""" +
       s""""files":[${e.files.map(q).mkString(",")}],""" +

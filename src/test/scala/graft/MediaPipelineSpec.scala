@@ -63,6 +63,30 @@ class MediaPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("fuzz: chunk and box sizes near Int.MaxValue hit the overrun check, not copyOfRange") {
+    import graft.operators.ContainerCodec
+    def le32(v: Int) = Array(v.toByte, (v >>> 8).toByte, (v >>> 16).toByte, (v >>> 24).toByte)
+    def be32(v: Int) = le32(v).reverse
+    def cc(s: String) = s.getBytes("US-ASCII")
+    val rnd = new scala.util.Random(7)
+    val sizes = Seq(Int.MaxValue, Int.MaxValue - 7, Int.MaxValue - 8, Int.MaxValue - 20,
+      Int.MinValue, -8, -1) ++ Seq.fill(40)(Int.MaxValue - rnd.nextInt(64))
+    val tail = Array.fill[Byte](16)(1)
+    // a valid leading chunk/box puts the oversized one at a non-zero offset, where
+    // Int arithmetic on offset + size wraps negative and slips past the bound check
+    for (sz <- sizes; chunk <- Seq("fmt ", "dur ", "data")) {
+      val wav = cc("RIFF") ++ le32(0) ++ cc("WAVE") ++ cc("pad ") ++ le32(4) ++
+        le32(0) ++ cc(chunk) ++ le32(sz) ++ tail
+      val ex = intercept[IllegalArgumentException](ContainerCodec.decode("audio/wav", wav))
+      assert(ex.getMessage === s"bad container: riff chunk '$chunk' overruns", s"size $sz")
+    }
+    for (sz <- sizes; box <- Seq("free", "gmvh", "mdat")) {
+      val mp4 = be32(16) ++ cc("ftyp") ++ cc("isom") ++ be32(0) ++ be32(sz) ++ cc(box) ++ tail
+      val ex = intercept[IllegalArgumentException](ContainerCodec.decode("video/mp4", mp4))
+      assert(ex.getMessage === s"bad container: bmff box '$box' overruns", s"size $sz")
+    }
+  }
+
   test("the codec is strategy-injectable (dummyStrategy analogue): the stub skips validation") {
     import graft.operators.{MediaContainers, StubMediaCodec}
     // the injected fake peeks bytes without parsing, so even CORRUPT containers

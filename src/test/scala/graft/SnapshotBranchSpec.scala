@@ -186,6 +186,33 @@ class SnapshotBranchSpec extends AnyFunSuite {
     assert(SnapshotSink.readCommitted(spark, out).count() > 0L)
   }
 
+  test("retention pins HEAD's version after a branch commit; an unresolvable HEAD fails loudly") {
+    val out = tmpDir("headpin")
+    SnapshotSink.run(docs, out, nBuckets = NB, waveSize = NB) // v1 = HEAD
+    SnapshotSink.branch(out, "wip", 1L)
+    SnapshotSink.upsertDocsToBranch(spark, out, "wip",
+      updateRows(docIdsInBucket(out, 2L, 1)), NB) // v2, HEAD stays at v1
+    assert(SnapshotSink.versions(out) === Seq(1L, 2L))
+
+    // HEAD's history file gone (what keepLast = 1 used to do here): HEAD resolves
+    // to no version, and both fork-point users refuse instead of comparing 0
+    val v1 = Paths.get(out, "manifest-v000001.json")
+    val aside = Paths.get(out, "v1.aside")
+    Files.move(v1, aside)
+    val refusals = Seq(
+      intercept[IllegalStateException](SnapshotSink.branch(out, "late", 2L)),
+      intercept[IllegalStateException](SnapshotSink.fastForward(spark, out, "wip")))
+    refusals.foreach(e => assert(e.getMessage.contains("matches no history version")))
+    assert(!SnapshotSink.branches(out).contains("late"))
+    Files.move(aside, v1)
+
+    // keepLast = 1 keeps v2 by age and v1 because HEAD points at it
+    assert(SnapshotSink.expireVersions(out, keepLast = 1) === Seq.empty)
+    assert(SnapshotSink.versions(out) === Seq(1L, 2L))
+    val ff = SnapshotSink.fastForward(spark, out, "wip")
+    assert((ff.toVersion, ff.newVersion) === ((2L, 3L)))
+  }
+
   test("streaming drain into a branch: main untouched until fast-forward, re-delivery skips") {
     val out = tmpDir("stream")
     val table = tmpDir("stream-table")
