@@ -41,7 +41,7 @@ object SparkEntry {
     ).orderBy(col("doc_id"))
   }
 
-  /** The ASSEMBLED doc form through the one-pass skew-routed pipeline
+  /** The ASSEMBLED doc form through the per-document map
     * (ExtractPipeline.extractAndReassemble) — spans flattened to a deterministic
     * string so the per-document array ORDER (the north-rule invariant) is part of
     * the value hash the driver compares. */

@@ -1,34 +1,41 @@
 package graft.operators
 
+import graft.functions.BoilerplateOps
 import graft.model._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * The flagship operator: interleaved documents -> extracted span sequences.
  *
- * Plan shape (all declarative except the OCR island):
+ * Two forms share one per-span contract (OCR for `image`, the boilerplate classifier
+ * for `text`, an error span for any other kind, `null` included):
  *
  * {{{
- *   docs(doc_id, lang, spans)
- *     |- explode(spans)
- *     |- kind='image' --> typed mapPartitions over per-executor EnginePool  (OCR island)
- *     |- kind='text'  --> TextClassifier (pure Catalyst, whole-stage codegen)
- *     \- unionByName --> [optional salted re-assembly agg]
+ *   doc form  (extractAndReassemble):
+ *     docs(doc_id, lang, spans) |- size(spans) > 0
+ *                               \- typed mapPartitions, one ReassembledDoc per row
+ *
+ *   flat form (extractFlat):
+ *     docs(doc_id, lang, spans)
+ *       |- explode(spans)
+ *       |- kind='image' --> typed mapPartitions over per-executor EnginePool  (OCR island)
+ *       |- kind='text'  --> TextClassifier (pure Catalyst, whole-stage codegen)
+ *       \- unionByName
  * }}}
  *
- * Scale notes (designed for 10^12 docs / 1000 executors, tested on local[32]):
- *  - The branch split means two scans of the input; with nested-schema pruning
- *    (spark.sql.optimizer.nestedSchemaPruning.enabled, on by default) the media branch
- *    reads only (doc_id, lang, spans.kind, spans.media_ref, spans.offset) and the text
- *    branch only (..., spans.text, spans.offset) — each scan is narrower than one fused
- *    row-mapper pass would be, and the text branch keeps whole-stage codegen which a
- *    fused mapPartitions over all spans would forfeit.
- *  - The flat form has NO shuffle: explode, filter, mapPartitions and union are all
- *    narrow. The only shuffles in the doc form are the re-assembly aggregation (salted,
- *    two-stage, see [[reassemble]]) and any final repartitionByRange for balanced output.
- *  - `lang` rides through the typed boundary inside the task row, so no join is needed
- *    to restore document metadata after OCR.
+ *  - The doc form is one scan plus one map: every span of a document already sits in
+ *    that document's row, so the spans are extracted and sorted in place — no
+ *    explode, no shuffle, no salted tail. Its parallelism is the input's split count.
+ *  - The flat form (one row per span, used by [[graft.sources.SnapshotSink]] and the
+ *    streaming extractors) has NO shuffle either. Each branch scans the input once;
+ *    with nested-schema pruning the media branch reads only (doc_id, lang,
+ *    spans.kind, spans.media_ref, spans.offset) and the text branch only (...,
+ *    spans.text, spans.offset), and the text branch keeps whole-stage codegen.
+ *  - [[reassemble]] groups flat rows back into documents (a shuffle, salted for the
+ *    heavy tail). It is the path for input that arrives flat, and the reference the
+ *    tests hold the doc form to.
  *  - Engine init happens once per (executor JVM, language) via [[EnginePool]], mirroring
  *    the reference's one TessBaseAPI::Init per Reader (uiucprescon/ocr/reader2.cpp:16).
  */
@@ -75,12 +82,7 @@ object ExtractPipeline {
       .as[MediaTaskL]
 
     val ocrResults: Dataset[OcrSpanWithLang] = mediaTasks.mapPartitions { it =>
-      // decode memo: load-once/read-many within a partition, the distributed analogue of
-      // Reader.read_image vs Reader.read (uiucprescon/ocr/reader.py:52-75).
-      val memo = new java.util.LinkedHashMap[String, Either[String, Array[Byte]]](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, Either[String, Array[Byte]]]): Boolean = size > 256
-      }
+      val memo = decodeMemo()
       it.map(t => ocrOne(t, config, memo))
     }
 
@@ -104,21 +106,31 @@ object ExtractPipeline {
     // ---- unknown-kind branch: contract parity with the golden oracle -------------
     // Oracle.extract maps any kind other than text/image to an EMPTY error span
     // ("unknown span kind: ..."), never silent omission — silently dropping the
-    // span would also break the n_doc_spans re-assembly invariant. Unreachable
-    // with the current synthesizer (two kinds); real corpora grow kinds.
+    // span would also break the n_doc_spans re-assembly invariant. A null kind is
+    // unknown too: `kind =!= "text"` alone is null for it, and so is `concat` with
+    // a null argument. Unreachable with the current synthesizer (two kinds); real
+    // corpora grow kinds.
     val unknownOut = explodedMedia
-      .filter(col("kind") =!= "text" && col("kind") =!= "image")
+      .filter(col("kind").isNull || (col("kind") =!= "text" && col("kind") =!= "image"))
       .select(col("doc_id"), col("lang"), col("n_doc_spans"), col("offset"),
         col("kind"),
         lit("").as("text"),
         col("media_ref"),
         lit(false).as("ok"),
-        concat(lit("unknown span kind: "), col("kind")).as("error"),
+        concat(lit("unknown span kind: "), coalesce(col("kind"), lit("null"))).as("error"),
         lit(0).as("n_words"),
         lit(0.0).as("conf_sum"))
 
     mediaOut.unionByName(textOut).unionByName(unknownOut)
   }
+
+  /** Per-partition decode memo: load-once/read-many within a partition, the distributed
+    * analogue of Reader.read_image vs Reader.read (uiucprescon/ocr/reader.py:52-75). */
+  private def decodeMemo(): java.util.Map[String, Either[String, Array[Byte]]] =
+    new java.util.LinkedHashMap[String, Either[String, Array[Byte]]](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Either[String, Array[Byte]]]): Boolean = size > 256
+    }
 
   /** OCR one media task. Decode runs BEFORE the engine-goodness check, mirroring
     * Reader2::get_ocr = load THEN get_ocr_from_image (uiucprescon/ocr/reader2.cpp:31-34):
@@ -147,7 +159,9 @@ object ExtractPipeline {
 
   /**
    * Re-assemble the flat span stream into per-document span sequences
-   * (doc_id, spans, ok, error, n_spans).
+   * (doc_id, spans, ok, error, n_spans). This is the path for input that arrives flat
+   * (one row per span); documents already in one row take [[extractAndReassemble]],
+   * which the test suites hold equal to `reassemble(extractFlat(docs))`.
    *
    * Skew-routed aggregation: documents are split by their span count (known per row —
    * `n_doc_spans` is stamped at explode time, so routing needs NO counting pre-pass):
@@ -210,24 +224,87 @@ object ExtractPipeline {
       .unionByName(twoStage(flat.filter(col("n_doc_spans") > SaltThreshold)))
 
   /**
-   * One-pass extract + skew-routed reassembly: documents are routed by span count
-   * BEFORE the OCR island, on the cheap `size(spans)` of the still-nested input.
+   * Extract every document in place: (doc_id, spans, ok, error, n_spans), one output
+   * row per input row with at least one span.
    *
-   * This exists because `reassemble(extractFlat(docs))` evaluates the `flat` subtree
-   * once per routing branch — Catalyst cannot push the `n_doc_spans` filters below
-   * the opaque typed `mapPartitions`, so every media span is decoded and OCR'd
-   * TWICE (measured: the composed form runs ~1.8x the one-pass wall time at both
-   * 8 and 32 pinned cores). Filtering the nested input first makes the two
-   * extraction branches disjoint, so the expensive island runs exactly once per
-   * span while the routing semantics (sorted path for normal docs, salted two-stage
-   * agg for the heavy tail) stay identical — asserted equal in GoldenExtractionSpec.
+   * Input contract: ONE row per `doc_id` (the table shape; [[graft.sources.Interleave]]
+   * enforces it for replicated corpora through its replica-stride `require`). Every
+   * span of a document is then in that document's row, so a single typed map over the
+   * rows does the whole job: one scan, no explode, no shuffle. Per span it calls what
+   * the flat form calls — [[ocrOne]] over the [[EnginePool]] for `image`, the
+   * boilerplate scanner behind [[TextClassifier.classify]] for `text`, the
+   * unknown-kind error span for anything else — and per document it reproduces
+   * [[reassemble]] exactly: spans sorted by (offset, kind, text, media_ref) with nulls
+   * first and strings in UTF-8 byte order (array_sort's struct order), `ok` = every
+   * span ok, `error` = the least (offset, error), `n_spans` = the span count. A row
+   * whose `spans` is null or empty gives no output row, as `explode` does.
+   * `reassemble(extractFlat(docs))` is the reference the test suites compare against.
    */
   def extractAndReassemble(
       docs: DataFrame, config: EngineConfig = EngineConfig.default): DataFrame = {
-    val n = size(col("spans"))
-    reassembleSorted(extractFlat(docs.filter(n <= SaltThreshold), config))
-      .unionByName(twoStage(extractFlat(docs.filter(n > SaltThreshold), config)))
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col("doc_id"), col("lang"), col("spans"))
+      .filter(size(col("spans")) > 0)
+      .as[Doc]
+      .mapPartitions { it =>
+        val memo = decodeMemo()
+        it.map(d => extractDoc(d, config, memo))
+      }
+      .toDF()
   }
+
+  private def extractDoc(
+      d: Doc,
+      config: EngineConfig,
+      memo: java.util.Map[String, Either[String, Array[Byte]]]): ReassembledDoc = {
+    val n = d.spans.size
+    val spans = new Array[OutSpan](n)
+    var errOffset = 0
+    var err: String = null
+    var i = 0
+    d.spans.foreach { s =>
+      val (out, error) = s.kind match {
+        case "image" =>
+          val r = ocrOne(MediaTaskL(d.doc_id, d.lang, n, s.offset, s.media_ref), config, memo)
+          (OutSpan(s.offset, "image", r.text, s.media_ref), r.error)
+        case "text" =>
+          val t = BoilerplateOps.extract(UTF8String.fromString(s.text))
+          (OutSpan(s.offset, "text", if (t == null) "" else t.toString, null), null)
+        case k =>
+          (OutSpan(s.offset, k, "", s.media_ref), "unknown span kind: " + k)
+      }
+      spans(i) = out
+      i += 1
+      if (error != null && (err == null || s.offset < errOffset
+          || (s.offset == errOffset && utf8Compare(error, err) < 0))) {
+        errOffset = s.offset
+        err = error
+      }
+    }
+    java.util.Arrays.sort(spans, spanOrder)
+    // every span that is not ok carries an error, so ok == "no error"
+    ReassembledDoc(d.doc_id, scala.collection.immutable.ArraySeq.unsafeWrapArray(spans),
+      err == null, err, n.toLong)
+  }
+
+  /** array_sort's order on the (offset, kind, text, media_ref) struct: nulls first,
+    * strings in UTF-8 byte order (not `String.compareTo`, which orders UTF-16 units). */
+  private val spanOrder: Ordering[OutSpan] = new Ordering[OutSpan] {
+    def compare(a: OutSpan, b: OutSpan): Int = {
+      var c = Integer.compare(a.offset, b.offset)
+      if (c == 0) c = utf8Compare(a.kind, b.kind)
+      if (c == 0) c = utf8Compare(a.text, b.text)
+      if (c == 0) c = utf8Compare(a.media_ref, b.media_ref)
+      c
+    }
+  }
+
+  private def utf8Compare(a: String, b: String): Int =
+    if (a eq b) 0
+    else if (a == null) -1
+    else if (b == null) 1
+    else UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
 
   /**
    * Sort-based re-assembly: one repartition on doc_id, an in-partition sort over

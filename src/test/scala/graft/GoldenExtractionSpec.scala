@@ -98,10 +98,9 @@ class GoldenExtractionSpec extends AnyFunSuite {
       === canonDocs(ExtractPipeline.reassemble(ExtractPipeline.extractFlat(docs))))
   }
 
-  test("pathological 5000-span mega-document routes through the salted tail correctly") {
-    // the heavy-tail shape the salted two-stage aggregation exists for: one document
-    // far past SaltThreshold, interleaved text/media, must reassemble bit-identically
-    // to the oracle with no reducer materializing the whole collect_list at once
+  test("5000-span mega-document reassembles exactly in the doc form") {
+    // the heavy-tail shape: one document far past SaltThreshold, interleaved
+    // text/media, must come out of the per-document map bit-identical to the oracle
     val spans = (0 until 5000).map { i =>
       if (i % 2 == 0) Span("text", s"<nav>n</nav><p>w$i</p><a href=\"u\">m</a>", null, i)
       else Span("image", null, s"m-9$i-$i", i)
@@ -118,6 +117,7 @@ class GoldenExtractionSpec extends AnyFunSuite {
         s.getAs[String]("media_ref")))
     assert(act === exp.spans.map(s => (s.offset, s.kind, s.text, s.media_ref)))
     assert(row.getAs[Boolean]("ok") === exp.ok)
+    assert(Option(row.getAs[String]("error")) === Option(exp.error))
   }
 
   test("archetype semantics: bad engine => empty text, not a failure") {
@@ -192,5 +192,33 @@ class GoldenExtractionSpec extends AnyFunSuite {
     val unknownRow = got.find(_.getString(1) === "table").get
     assert(!unknownRow.getBoolean(4)
       && unknownRow.getString(5) === "unknown span kind: table")
+
+    // a null kind is unknown as well: `kind =!= "text"` is null for it, and a
+    // filter on that alone dropped the span from the flat and the doc form
+    val nullKind = Doc("doc-n", "en", Seq(
+      Span(null, null, "m-1-0", 0), Span("text", "<p>a</p>", null, 1)))
+    val nullGolden = Oracle.extract(nullKind)
+    assert(!nullGolden.ok && nullGolden.error === "unknown span kind: null")
+    val nullFlat = ExtractPipeline.extractFlat(Seq(nullKind).toDS().toDF())
+      .orderBy(col("offset"))
+      .select(col("kind"), col("ok"), col("error"), col("n_doc_spans"))
+      .collect().map(r => (r.getString(0), r.getBoolean(1), r.getString(2), r.getInt(3)))
+    assert(nullFlat.toSeq === Seq(
+      (null, false, "unknown span kind: null", 2), ("text", true, null, 2)))
+
+    // the doc form agrees with the oracle on both documents
+    Seq(doc, nullKind).foreach { d =>
+      val exp = Oracle.extract(d)
+      val out = ExtractPipeline.extractAndReassemble(Seq(d).toDS().toDF()).collect()
+      assert(out.length === 1, d.doc_id)
+      val r = out(0)
+      val act = r.getSeq[Row](r.fieldIndex("spans")).map(s =>
+        (s.getAs[Int]("offset"), s.getAs[String]("kind"), s.getAs[String]("text"),
+          s.getAs[String]("media_ref")))
+      assert(act === exp.spans.map(s => (s.offset, s.kind, s.text, s.media_ref)), d.doc_id)
+      assert(r.getAs[Boolean]("ok") === exp.ok, d.doc_id)
+      assert(r.getAs[String]("error") === exp.error, d.doc_id)
+      assert(r.getAs[Long]("n_spans") === d.spans.size.toLong, d.doc_id)
+    }
   }
 }

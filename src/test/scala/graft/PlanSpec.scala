@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
  *    equi-join respectively);
  *  - the flagship's per-branch nested-schema pruning must hold on a materialized
  *    corpus scan: the media branch never reads spans.text (the bulk of the bytes),
- *    the text branch never reads spans.media_ref.
+ *    the text branch never reads spans.media_ref;
+ *  - the flagship's doc form is one scan plus one map: no Exchange.
  */
 class PlanSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -107,6 +108,16 @@ class PlanSpec extends AnyFunSuite {
       s"media branch scan must not read spans.text: $scans")
     assert(scans.exists(s => !s.contains("media_ref")),
       s"text branch scan must not read spans.media_ref: $scans")
+  }
+
+  test("doc-form extraction plans one file scan and no Exchange") {
+    val df = graft.operators.ExtractPipeline.extractAndReassemble(
+      graft.sources.Interleave.materializedDocs(spark, sfDir))
+    val plan = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    val scans = plan.linesIterator.filter(_.contains("ReadSchema")).toSeq
+    assert(scans.size === 1, s"expected one scan, got: $scans")
+    assert(!planOf(df).contains("Exchange"), s"doc form plans a shuffle:\n$plan")
   }
 
   // (the zero-Exchange bucketed-join property is asserted in BucketedJoinSpec, which
